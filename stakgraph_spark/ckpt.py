@@ -83,14 +83,42 @@ def _parquet_dir() -> str:
     return _DIR
 
 
-def ckpt(df, eager: bool = True):
+def _is_empty(df) -> bool:
+    """True when Catalyst has already proven `df` empty (its optimized plan
+    is bounded at zero rows — an empty LocalRelation after empty-relation
+    propagation).  Planning only; no job runs."""
+    rows = df._jdf.queryExecution().optimizedPlan().maxRows()
+    return rows.isDefined() and rows.get() == 0
+
+
+def ckpt(df, name: str, eager: bool = True):
     """Materialize a stage DataFrame and truncate its lineage.
+
+    `name` labels the stage: it is the `spark.job.description` of every job
+    the materialization runs on the calling thread (restored afterwards),
+    so each job in the event log maps to its checkpoint.
+
+    A plan Catalyst has already proven empty is returned as it is: it costs
+    no job, and downstream plans keep folding it away (a checkpointed empty
+    table is an opaque scan to the optimizer).
 
     eager=False marks single-consumer stages where an immediate blocking
     materialization is pure barrier cost; BOTH backends honor it (parquet
     mode used to force an eager write, re-introducing exactly the barriers
     the lazy call sites exist to avoid — ADVICE r04).  The mode env is read
     per call so tests/benches can flip backends after import."""
+    if _is_empty(df):
+        return df
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        return _materialize(df, eager)
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
+
+
+def _materialize(df, eager: bool):
     if os.environ.get("STAKGRAPH_CKPT", "local") == "parquet":
         if not eager:
             # no lazy parquet materialization exists; pure pass-through so

@@ -61,13 +61,14 @@ def _paths_match(f_seg: Column, b_seg: Column) -> Column:
     return api_rule & segs_ok
 
 
-def link_requests_to_endpoints(nodes: DataFrame) -> DataFrame:
-    reqs = (nodes.where(F.col("node_type") == "Request")
+def link_requests_to_endpoints(requests: DataFrame,
+                               endpoints: DataFrame) -> DataFrame:
+    reqs = (requests
             .select("repo", "lang", "name", "file", "start",
                     F.element_at("meta", "verb").alias("verb"))
             .withColumn("npath", normalize_frontend(F.col("name")))
             .where(F.col("npath").isNotNull() & F.col("verb").isNotNull()))
-    eps = (nodes.where(F.col("node_type") == "Endpoint")
+    eps = (endpoints
            .select("repo", F.col("lang").alias("ep_lang"),
                    F.col("name").alias("ep_name"), F.col("file").alias("ep_file"),
                    F.col("start").alias("ep_start"),
@@ -101,13 +102,13 @@ _VERB_PATTERNS = [
 ]
 
 
-def link_e2e_tests_pages(nodes: DataFrame) -> DataFrame:
+def link_e2e_tests_pages(e2e_tests: DataFrame, pages: DataFrame) -> DataFrame:
     """E2eTest body contains Page name (case-insensitive) -> Calls edge
     (linker.rs:213-237)."""
-    tests = (nodes.where(F.col("node_type") == "E2eTest")
+    tests = (e2e_tests
              .select("repo", "lang", "name", "file", "start",
                      F.lower(F.coalesce("body", F.lit(""))).alias("body_lc")))
-    pages = (nodes.where(F.col("node_type") == "Page")
+    pages = (pages
              .select("repo", F.col("name").alias("p_name"),
                      F.col("file").alias("p_file"), F.col("start").alias("p_start")))
     # shuffle join on repo (corpus-proportional page table must not be a
@@ -124,7 +125,8 @@ def link_e2e_tests_pages(nodes: DataFrame) -> DataFrame:
     )
 
 
-def link_integration_tests(nodes: DataFrame) -> DataFrame:
+def link_integration_tests(integration_tests: DataFrame,
+                           endpoints: DataFrame) -> DataFrame:
     """IntegrationTest body contains endpoint name (case-insensitive) + verb
     agreement -> Calls edge (linker.rs:34-131).
 
@@ -133,7 +135,7 @@ def link_integration_tests(nodes: DataFrame) -> DataFrame:
     shuffles on repo (co-partitioned with tests); AQE broadcasts the endpoint
     side when it is small — a mandatory broadcast of ALL repos' endpoints
     would grow with the corpus."""
-    tests = (nodes.where(F.col("node_type") == "IntegrationTest")
+    tests = (integration_tests
              .select("repo", "lang", "name", "file", "start",
                      F.lower(F.coalesce("body", F.lit(""))).alias("body_lc"),
                      F.coalesce("body", F.lit("")).alias("body")))
@@ -146,7 +148,7 @@ def link_integration_tests(nodes: DataFrame) -> DataFrame:
             F.flatten(F.array(*[F.col(f"v{i}") for i in range(len(_VERB_PATTERNS))])),
             lambda v: F.upper(v)))).drop(*[f"v{i}" for i in range(len(_VERB_PATTERNS))])
 
-    eps = (nodes.where(F.col("node_type") == "Endpoint")
+    eps = (endpoints
            .select("repo", F.col("name").alias("ep_name"),
                    F.col("file").alias("ep_file"), F.col("start").alias("ep_start"),
                    F.element_at("meta", "verb").alias("ep_verb")))
@@ -175,9 +177,6 @@ _TS_TESTID = r"""data-testid=["']([^"']+)["']"""
 _TS_TESTID_BRACE = r"""data-testid=\{['"`]([^'"`]+)['"`]\}"""
 _RB_TESTID = r"""get_by_test_id\(['"]([^'"]+)['"]\)"""
 
-_FRONTEND_LANGS = ["typescript", "react"]
-
-
 def _test_ids(body_col: Column, ext_col: Column) -> Column:
     ts = F.array_union(
         F.regexp_extract_all(body_col, F.lit(_TS_TESTID), 1),
@@ -188,18 +187,18 @@ def _test_ids(body_col: Column, ext_col: Column) -> Column:
             .otherwise(F.array().cast("array<string>"))
 
 
-def link_e2e_test_ids(nodes: DataFrame) -> DataFrame:
-    """E2eTest and frontend Function share a test id -> Calls edge
-    (link_e2e_tests, linker.rs:242-280).  Keyed on (repo, id): the reference
-    joins globally because it builds one repo at a time; at multi-repo scale
-    a global id join would cross-link unrelated repos."""
+def link_e2e_test_ids(e2e_tests: DataFrame,
+                      frontend_functions: DataFrame) -> DataFrame:
+    """E2eTest and frontend (typescript / react) Function share a test id ->
+    Calls edge (link_e2e_tests, linker.rs:242-280).  Keyed on (repo, id):
+    the reference joins globally because it builds one repo at a time; at
+    multi-repo scale a global id join would cross-link unrelated repos."""
     ext = F.element_at(F.split("file", "\\."), -1)
-    tests = (nodes.where(F.col("node_type") == "E2eTest")
+    tests = (e2e_tests
              .select("repo", "lang", "name", "file", "start",
                      F.explode(_test_ids(F.coalesce("body", F.lit("")), ext))
                      .alias("tid")))
-    fns = (nodes.where((F.col("node_type") == "Function")
-                       & F.col("lang").isin(_FRONTEND_LANGS))
+    fns = (frontend_functions
            .select("repo", F.col("name").alias("f_name"),
                    F.col("file").alias("f_file"), F.col("start").alias("f_start"),
                    F.explode(_test_ids(F.coalesce("body", F.lit("")), ext))
@@ -220,7 +219,10 @@ def link_e2e_test_ids(nodes: DataFrame) -> DataFrame:
 # indirect integration tests via helper functions (linker.rs:94-131)
 # ---------------------------------------------------------------------------
 
-def indirect_test_endpoints(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+def indirect_test_endpoints(integration_tests: DataFrame,
+                            functions: DataFrame, requests: DataFrame,
+                            endpoints: DataFrame,
+                            edges: DataFrame) -> DataFrame:
     """IntegrationTest -CALLS-> helper Function (-CALLS-> nested helper)
     whose body issues a Request matching an Endpoint -> the ENDPOINT node
     gains meta.indirect_test / meta.test_helper (linker.rs:94-131; the
@@ -229,12 +231,9 @@ def indirect_test_endpoints(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     Returns (key_h, indirect_test, test_helper) for the meta merge —
     identity here is the 8-byte key_h surrogate (pipeline.EDGE_COLS_H):
     this runs inside the link plane, where edges carry hashed endpoints."""
-    keyed = nodes.select(
-        "key_h", "node_type", "repo", "lang", "name", "file", "start",
-        "end", F.element_at("meta", "verb").alias("verb"))
-    tests = keyed.where(F.col("node_type") == "IntegrationTest").select(
+    tests = integration_tests.select(
         F.col("key_h").alias("t_key"), F.col("name").alias("t_name"))
-    fns = keyed.where(F.col("node_type") == "Function").select(
+    fns = functions.select(
         F.col("key_h").alias("h_key"), F.col("name").alias("h_name"),
         F.col("repo").alias("h_repo"), F.col("file").alias("h_file"),
         F.col("start").alias("h_start"), F.col("end").alias("h_end"))
@@ -256,10 +255,11 @@ def indirect_test_endpoints(nodes: DataFrame, edges: DataFrame) -> DataFrame:
                   "h_start", "h_end"))
     helpers = h1.unionByName(h2).distinct()
 
-    reqs = keyed.where(F.col("node_type") == "Request").select(
+    reqs = requests.select(
         F.col("key_h").alias("r_key"), F.col("name").alias("r_name"),
         F.col("repo").alias("r_repo"), F.col("file").alias("r_file"),
-        F.col("start").alias("r_start"), F.col("verb").alias("r_verb"))
+        F.col("start").alias("r_start"),
+        F.element_at("meta", "verb").alias("r_verb"))
     # request belongs to helper: explicit Calls edge OR spatial containment
     by_edge = (helpers.join(_calls(3), helpers["h_key"] == F.col("c3_src"))
                .join(reqs, F.col("c3_dst") == reqs["r_key"])
@@ -273,10 +273,10 @@ def indirect_test_endpoints(nodes: DataFrame, edges: DataFrame) -> DataFrame:
              .withColumn("npath", normalize_frontend(F.col("r_name")))
              .where(F.col("npath").isNotNull() & F.col("r_verb").isNotNull()))
 
-    eps = (keyed.where(F.col("node_type") == "Endpoint")
-           .select("key_h", F.col("repo").alias("h_repo"),
-                   normalize_backend(F.col("name")).alias("npath"),
-                   F.upper("verb").alias("e_verb")))
+    eps = endpoints.select(
+        "key_h", F.col("repo").alias("h_repo"),
+        normalize_backend(F.col("name")).alias("npath"),
+        F.upper(F.element_at("meta", "verb")).alias("e_verb"))
     hits = hreqs.join(
         eps, (hreqs["h_repo"] == eps["h_repo"])
         & (hreqs["npath"] == eps["npath"])

@@ -123,11 +123,11 @@ def resolve_calls(mentions: DataFrame, functions: DataFrame,
             mentions = mentions.withColumn(c, F.lit(None).cast("string"))
     # the symbol-table base feeds ~6 aggregate views per cascade instance;
     # checkpointing it keeps every downstream join plan shallow
-    fns = _ckpt(_fn_base(functions), eager=False)
+    fns = _ckpt(_fn_base(functions), "cascade_functions", eager=False)
 
     resolved = _cascade_1_to_6(mentions, fns, instances, variables, imports_map,
                                struct_fields, trait_impls=trait_impls)
-    resolved = _ckpt(resolved)
+    resolved = _ckpt(resolved, "cascade")
 
     # 7. member_expr: unresolved mentions WITH an operand -> resolve the base
     # object as a function via cascade 1-4 (format.rs:1208-1239).  Only call
@@ -160,7 +160,7 @@ def resolve_calls(mentions: DataFrame, functions: DataFrame,
     # member misses -> USES family) share one evaluation of this cascade.
     base_res = _ckpt(_cascade_1_to_6(base, fns, instances, variables,
                                      imports_map, None, lean=True),
-                     eager=False)
+                     "cascade_member_expr", eager=False)
     member = (base_res.where(F.col("dst_file").isNotNull())
               .withColumn("dst_name", F.col("called"))   # the base object's name
               .withColumn("called", F.col("orig_called"))
@@ -352,14 +352,19 @@ def _cascade_1_to_6(mentions: DataFrame, fns: DataFrame, instances: DataFrame,
         by_operand = (fns.where(F.col("m_operand").isNotNull())
                       .groupBy(*KEY, "name", "m_operand")
                       .agg(F.min_by(_cand(), "skey").alias("r_operand")))
-        # plain shuffle join on (repo, lang, operand): the instance table
-        # grows with the corpus, so a mandatory broadcast would blow the
-        # driver at 10^6 repos — AQE picks broadcast when it is actually small
-        m = (m.join(inst, KEY + ["operand"], "left")
-              .join(by_operand.withColumnRenamed("name", "called")
-                              .withColumnRenamed("m_operand", "data_type"),
-                    KEY + ["called", "data_type"], "left")
-              .drop("data_type"))
+        # instance -> (method name, pick), joined BEFORE the mentions: `inst`
+        # is unique per (repo, lang, operand) and by_operand per (repo, lang,
+        # name, class), so the pair is unique per (operand, called) and one
+        # left join equals the two chained ones — and a corpus without
+        # Instance nodes folds the whole strategy away.
+        # Plain shuffle joins: the instance table grows with the corpus, so
+        # a mandatory broadcast would blow the driver at 10^6 repos — AQE
+        # picks broadcast when it is actually small
+        inst_methods = (inst.join(
+            by_operand.withColumnRenamed("name", "called")
+                      .withColumnRenamed("m_operand", "data_type"),
+            KEY + ["data_type"], "inner").drop("data_type"))
+        m = m.join(inst_methods, KEY + ["operand", "called"], "left")
 
         # -- 6. nested_var: Var operand -> Function meta.nested_in == operand
         var_names = (variables.select(*KEY, F.col("name").alias("operand")).distinct()

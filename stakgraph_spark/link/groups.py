@@ -11,18 +11,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..inventory import RawInventory
+
 KEY = ["repo", "lang"]
 
 
 def endpoint_prefixes(mention: DataFrame, eps: DataFrame,
-                      imports_map: DataFrame) -> DataFrame:
-    """-> (repo, lang, name, file, start, verb, prefix) rename map."""
+                      imports_map: DataFrame, inv: RawInventory) -> DataFrame:
+    """-> (repo, lang, name, file, start, verb, prefix) rename map.  Each
+    group form reads its own mention kind through the raw inventory, so a
+    form the corpus never uses plans as an empty relation."""
     ep = eps.select(*KEY, "name", "file", "start",
                     F.element_at("meta", "verb").alias("verb"),
                     F.element_at("meta", "handler").alias("handler"))
 
     # (a) same-file handler registrations (actix scope+service, axum inline nest)
-    same = (mention.where(F.col("m_kind") == "ep_prefix_handler")
+    same = (inv.mentions(mention, "ep_prefix_handler")
             .select(*KEY, F.col("src_file").alias("file"),
                     F.col("dst_name").alias("handler"),
                     F.element_at("m_extra", "prefix").alias("prefix")))
@@ -30,7 +34,7 @@ def endpoint_prefixes(mention: DataFrame, eps: DataFrame,
 
     # (b) rocket mounts: handler name matches globally, endpoint file must
     # contain 'rocket' (rust.rs:1206-1214)
-    rocket = (mention.where(F.col("m_kind") == "ep_prefix_rocket")
+    rocket = (inv.mentions(mention, "ep_prefix_rocket")
               .select(*KEY, F.col("dst_name").alias("handler"),
                       F.element_at("m_extra", "prefix").alias("prefix")))
     m_rocket = (ep.where(F.col("file").contains("rocket"))
@@ -39,7 +43,7 @@ def endpoint_prefixes(mention: DataFrame, eps: DataFrame,
     # (c) import-resolved groups (actix configure, axum nest(router_fn())):
     # ident -> module via the group file's import map -> endpoints whose file
     # contains the module (rust.rs:1098-1118, 1233-1259)
-    imp = (mention.where(F.col("m_kind") == "ep_prefix_import")
+    imp = (inv.mentions(mention, "ep_prefix_import")
            .select(*KEY, F.col("src_file").alias("gfile"),
                    F.col("dst_name").alias("ident"),
                    F.element_at("m_extra", "prefix").alias("prefix")))
@@ -56,7 +60,7 @@ def endpoint_prefixes(mention: DataFrame, eps: DataFrame,
     # same-file endpoints whose meta.object == routerVar and whose path has
     # no '/:' segment; else import-resolve routerVar -> endpoints in files
     # containing the module path
-    use_g = (mention.where(F.col("m_kind") == "ep_group_use")
+    use_g = (inv.mentions(mention, "ep_group_use")
              .select(*KEY, F.col("src_file").alias("gfile"),
                      F.col("dst_name").alias("router_var"),
                      F.element_at("m_extra", "prefix").alias("prefix")))
@@ -89,9 +93,13 @@ def endpoint_prefixes(mention: DataFrame, eps: DataFrame,
 
 
 def apply_endpoint_groups(ex_nodes: DataFrame, mention: DataFrame,
-                          imports_map: DataFrame) -> tuple[DataFrame, DataFrame]:
+                          imports_map: DataFrame, inv: RawInventory
+                          ) -> tuple[DataFrame, DataFrame]:
     eps = ex_nodes.where(F.col("node_type") == "Endpoint")
-    renames = endpoint_prefixes(mention, eps, imports_map)
+    renames = endpoint_prefixes(mention, inv.nodes(ex_nodes, "Endpoint"),
+                                imports_map, inv)
+    # a corpus without group mentions plans `renames` as an empty relation,
+    # so this probe runs no job
     if renames.isEmpty():
         return ex_nodes, mention
     renames = renames.localCheckpoint()

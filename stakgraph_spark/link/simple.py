@@ -31,10 +31,6 @@ def _skey(node_type: str):
     return node_key_col(F.lit(node_type), F.col("name"), F.col("file"), F.col("start"))
 
 
-def _nodes_of(nodes: DataFrame, t: str) -> DataFrame:
-    return nodes.where(F.col("node_type") == t)
-
-
 def build_symtab(nodes: DataFrame) -> DataFrame:
     """(repo, lang, name) -> per-type resolution summaries `t_<Type>`:
     struct(glob: struct(file,start)   first candidate in node-key order,
@@ -106,13 +102,13 @@ def resolve_implements(mentions: DataFrame, symtab: DataFrame) -> DataFrame:
     )
 
 
-def resolve_handlers(mentions: DataFrame, nodes: DataFrame) -> DataFrame:
+def resolve_handlers(mentions: DataFrame, functions: DataFrame) -> DataFrame:
     """Endpoint handler mentions -> Endpoint -HANDLER-> Function.
 
     Python handler_finder semantics (python.rs:518-562): dotted handler =
     Django style (dir/module.py, dir/module/views.py, then any function of
     that name); plain handler = same-file exact lookup."""
-    fns = (_nodes_of(nodes, "Function")
+    fns = (functions
            .select(*KEY, "name", "file", "start", _skey("Function").alias("skey")))
     m = (mentions
          .withColumn("has_dot", F.col("dst_name").contains("."))
@@ -159,11 +155,12 @@ def resolve_handlers(mentions: DataFrame, nodes: DataFrame) -> DataFrame:
 
 
 
-def resolve_verb_handlers(mentions: DataFrame, nodes: DataFrame) -> DataFrame:
+def resolve_verb_handlers(mentions: DataFrame,
+                          functions: DataFrame) -> DataFrame:
     """Next.js verb-style handlers: Endpoint meta.handler is an HTTP verb;
     the handler function is the same-file function whose name matches the
     verb case-insensitively (react_ts.rs:965-976)."""
-    fns = (_nodes_of(nodes, "Function")
+    fns = (functions
            .select(*KEY, "name", "file", "start", _skey("Function").alias("skey"))
            .withColumn("uname", F.upper("name")))
     byfile = (fns.groupBy(*KEY, "uname", "file")
@@ -186,12 +183,12 @@ def resolve_verb_handlers(mentions: DataFrame, nodes: DataFrame) -> DataFrame:
 
 
 
-def function_contains_vars(ident_mentions: DataFrame, nodes: DataFrame,
+def function_contains_vars(ident_mentions: DataFrame, variables: DataFrame,
                            import_bodies: DataFrame) -> DataFrame:
     """Identifiers used in a function body that name a Var node ->
     Function -CONTAINS-> Var when the var is same-file, imported (import
     section substring), or same-dir (format.rs:795-845)."""
-    variables = (_nodes_of(nodes, "Var")
+    variables = (variables
                  .select(*KEY, F.col("name").alias("dst_name"),
                          F.col("file").alias("v_file"),
                          F.col("start").alias("v_start")))
@@ -234,7 +231,7 @@ def import_edges(import_mentions: DataFrame, nodes: DataFrame) -> DataFrame:
          .groupBy(*KEY, "src_name", "src_file", "src_start", "dst_name")
          .agg(F.min_by(F.struct("node_type", "file", "start"),
                        F.struct(F.col("prio"), F.col("skey"))).alias("t")))
-    files = _nodes_of(nodes, "File").select(
+    files = nodes.where(F.col("node_type") == "File").select(
         *KEY, F.col("file").alias("src_file"), F.col("name").alias("f_name"),
         F.col("start").alias("f_start"))
     return (m.join(files, KEY + ["src_file"], "inner")
@@ -248,16 +245,15 @@ def import_edges(import_mentions: DataFrame, nodes: DataFrame) -> DataFrame:
             ))
 
 
-def ruby_dm_within(nodes: DataFrame) -> DataFrame:
+def ruby_dm_within(data_models: DataFrame, functions: DataFrame) -> DataFrame:
     """Ruby data_model_within_finder (queries/ruby.rs:263-287): every
-    Function in {dm.name}_controller.rb CONTAINS the DataModel."""
-    dms = (nodes.where((F.col("node_type") == "DataModel")
-                       & (F.col("lang") == "ruby"))
+    Function in {dm.name}_controller.rb CONTAINS the DataModel.  Both inputs
+    are the ruby slices."""
+    dms = (data_models
            .select(*KEY, F.col("name").alias("dm_name"),
                    F.col("file").alias("dm_file"), F.col("start").alias("dm_start"),
                    F.concat(F.col("name"), F.lit("_controller.rb")).alias("ctrl")))
-    fns = (nodes.where((F.col("node_type") == "Function")
-                       & (F.col("lang") == "ruby"))
+    fns = (functions
            .select(*KEY, "name", "file", "start",
                    F.element_at(F.split("file", "/"), -1).alias("ctrl")))
     return (fns.join(dms, KEY + ["ctrl"], "inner")
@@ -339,14 +335,13 @@ def fused_symtab_edges(tagged: DataFrame, symtab: DataFrame) -> DataFrame:
     )
 
 
-def php_handler_edges(mentions: DataFrame, nodes: DataFrame) -> DataFrame:
+def php_handler_edges(mentions: DataFrame, functions: DataFrame) -> DataFrame:
     """Laravel `[Controller::class, 'method']` / controller-group / resource
     handlers: the action Function in the file whose basename is
     {Controller}.php (handler_finder, php.rs:632-758).  Endpoints are KEPT
     when the action does not exist — only the edge is skipped (unlike ruby's
-    admission drop)."""
-    fns = (nodes.where((F.col("node_type") == "Function")
-                       & (F.col("lang") == "php"))
+    admission drop).  `functions` is the php slice."""
+    fns = (functions
            .select(*KEY, F.col("name").alias("dst_name"),
                    F.col("file").alias("f_file"), F.col("start").alias("f_start"),
                    F.element_at(F.split("file", "/"), -1).alias("ctrl"),
@@ -368,7 +363,7 @@ def php_handler_edges(mentions: DataFrame, nodes: DataFrame) -> DataFrame:
     )
 
 
-def angular_renders(mentions: DataFrame) -> DataFrame:
+def angular_renders(renders: DataFrame, components: DataFrame) -> DataFrame:
     """Angular html pages render component templates through the component's
     selector: an html file using `<app-people-list>` renders the template of
     the @Component whose selector is `app-people-list`
@@ -376,10 +371,10 @@ def angular_renders(mentions: DataFrame) -> DataFrame:
 
     ng_render mentions carry (html Page ref, selector); ng_component
     mentions carry (component Page ref, selector, resolved template path)."""
-    rend = (mentions.where(F.col("m_kind") == "ng_render")
+    rend = (renders
             .select(*KEY, "src_name", "src_file", "src_start",
                     F.col("dst_name").alias("selector")))
-    comp = (mentions.where(F.col("m_kind") == "ng_component")
+    comp = (components
             .select(*KEY, F.col("dst_name").alias("selector"),
                     F.col("dst_file").alias("template")))
     j = rend.join(comp, KEY + ["selector"], "inner")
@@ -395,7 +390,7 @@ def angular_renders(mentions: DataFrame) -> DataFrame:
 
 
 def resolve_uses(unresolved: DataFrame, imports_map: DataFrame,
-                 nodes: DataFrame) -> DataFrame:
+                 libraries: DataFrame) -> DataFrame:
     """Cascade-unresolved call mentions that target an IMPORTED LIBRARY ->
     Function -USES-> Library.
 
@@ -423,7 +418,7 @@ def resolve_uses(unresolved: DataFrame, imports_map: DataFrame,
     # names keep the whole word, e.g. "requests==2.31.0" — reference parity)
     # then take the last path segment ("gorm.io/gorm" -> "gorm")
     lib_base = F.regexp_replace(F.col("name"), r"[=<>!~\[@].*$", "")
-    libs = (nodes.where(F.col("node_type") == "Library")
+    libs = (libraries
             .select(*KEY, F.col("name").alias("lib_name"), "file", "start",
                     F.element_at(F.split(lib_base, "/"), -1)
                     .alias("mod_last"),
@@ -443,8 +438,8 @@ def resolve_uses(unresolved: DataFrame, imports_map: DataFrame,
     )
 
 
-def ruby_admit_endpoints(eps: DataFrame, mentions: DataFrame,
-                         ex_nodes: DataFrame) -> tuple[DataFrame, DataFrame]:
+def ruby_admit_endpoints(eps: DataFrame, handlers: DataFrame,
+                         functions: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Ruby (rails) endpoint admission: the handler must resolve to an action
     Function in a file whose basename is the route's controller suffix
     (handler_finder, queries/ruby.rs:531-660) — unresolvable candidates from
@@ -452,15 +447,14 @@ def ruby_admit_endpoints(eps: DataFrame, mentions: DataFrame,
     (name, file, verb) (add_endpoints, btreemap_graph.rs:352-372, finder
     order carried as meta.finder_rank).
 
-    Returns (kept endpoint node rows, Handler edges)."""
-    fns = (ex_nodes.where((F.col("node_type") == "Function")
-                          & (F.col("lang") == "ruby"))
+    Every input is the ruby slice (endpoints, handler mentions,
+    functions).  Returns (kept endpoint node rows, Handler edges)."""
+    fns = (functions
            .select(*KEY, F.col("name").alias("dst_name"),
                    F.col("file").alias("f_file"), F.col("start").alias("f_start"),
                    F.element_at(F.split("file", "/"), -1).alias("ctrl"),
                    _skey("Function").alias("skey")))
-    hm = (mentions.where((F.col("m_kind") == "handler")
-                         & (F.col("lang") == "ruby"))
+    hm = (handlers
           .select(*KEY, "src_name", "src_file", "src_start", "src_verb",
                   "dst_name", F.element_at("m_extra", "ctrl").alias("ctrl")))
     resolved = (hm.join(fns, KEY + ["dst_name", "ctrl"], "inner")

@@ -21,10 +21,11 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .extract import extract_raw
+from .inventory import RawInventory, kinds_metric
 from .keys import node_key_col
 from .langspec import LANGS
 from .link import api as api_link
@@ -49,10 +50,7 @@ EDGE_COLS = ["src_key", "dst_key", "edge_type", "operand", "confidence",
 EDGE_COLS_H = ["src_h", "dst_h", "edge_type", "operand", "confidence",
                "strategy", "repo", "lang"]
 
-
 from .ckpt import ckpt as _ckpt
-
-
 
 
 @dataclass
@@ -60,6 +58,21 @@ class GraphResult:
     nodes: DataFrame
     edges: DataFrame
     metrics: list[dict] = field(default_factory=list)
+    # (rec, kind, lang) triples of the RAW stream (inventory.RawInventory)
+    inventory: frozenset = frozenset()
+
+
+def _subunion_k() -> int:
+    """STAKGRAPH_SUBUNION_K: edge families per sub-union checkpoint."""
+    v = os.environ.get("STAKGRAPH_SUBUNION_K", "5")
+    try:
+        k = int(v)
+    except ValueError:
+        k = 0
+    if k < 1:
+        raise ValueError(
+            f"STAKGRAPH_SUBUNION_K must be an integer >= 1, got {v!r}")
+    return k
 
 
 def _key(df: DataFrame, type_col="node_type") -> DataFrame:
@@ -219,10 +232,12 @@ def build_graph(spark: SparkSession, source: DataFrame,
                 raw: DataFrame | None = None) -> GraphResult:
     """source (repo,path,commit,lang,content) -> GraphResult.
 
-    `raw` may be a pre-materialized extraction stream (the resumable runner
-    persists it per (repo, lang) partition and re-feeds it on restart)."""
+    `raw` may be a persisted extraction stream (the resumable runner keeps
+    it per (repo, lang) partition and re-feeds it on restart); it is
+    checkpointed here like a fresh extraction."""
     metrics: list[dict] = []
     t0 = time.time()
+    subunion_k = _subunion_k()   # an invalid value fails before any job
 
     def stage(name: str):
         metrics.append({"stage": name, "t": round(time.time() - t0, 3)})
@@ -263,10 +278,14 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # from the file plane, so the file/package plane's ~2.5 s of cold
     # Catalyst analysis (measured at 0.09 core-util) overlaps the
     # extraction's execution instead of preceding it on an idle cluster.
-    fut_raw = None
+    # The checkpoint job also observes the raw-kind inventory
+    # (inventory.py), which every kind-sliced link input below is planned
+    # against.
     if raw is None:
-        fut_raw = pool.submit(
-            lambda: _ckpt(extract_raw(src.where(F.col("skipped").isNull()))))
+        raw = extract_raw(src.where(F.col("skipped").isNull()))
+    raw_obs = Observation()
+    fut_raw = pool.submit(
+        lambda r=raw.observe(raw_obs, kinds_metric()): _ckpt(r, "raw"))
 
     fp_nodes, fp_edges = file_plane(src)
     # workspace/package detection (monorepos): Package nodes + edges
@@ -277,8 +296,8 @@ def build_graph(spark: SparkSession, source: DataFrame,
     fp_edges = fp_edges.unionByName(_norm_edges(pkg_edges))
     stage("file_plane")
 
-    if fut_raw is not None:
-        raw = fut_raw.result()
+    raw = fut_raw.result()
+    inv = RawInventory(raw_obs.get["kinds"])
     stage("raw_extracted")
 
     ex_nodes = raw.where(F.col("rec") == "node").select(
@@ -299,7 +318,7 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # dedup on (name, file, verb).  Ruby (rails) endpoints resolve their
     # handler FIRST (RESTful expansion candidates without a matching
     # controller action are dropped), then dedup first-finder-wins.
-    eps_all = ex_nodes.where(F.col("node_type") == "Endpoint") \
+    eps_all = inv.nodes(ex_nodes, "Endpoint") \
         .where(F.element_at("meta", "handler").isNotNull())
     # deterministic first-wins (min start): dropDuplicates picks an arbitrary
     # row, which made the graph differ between otherwise identical runs
@@ -311,17 +330,20 @@ def build_graph(spark: SparkSession, source: DataFrame,
            .agg(F.min_by(F.struct(*ep_cols), "start").alias("k"))
            .select("k.*"))
     ruby_eps, ruby_handler_edges = simple_link.ruby_admit_endpoints(
-        eps_all.where(F.col("lang") == "ruby"), mention, ex_nodes)
+        inv.nodes(eps_all, "Endpoint", ["ruby"]),
+        inv.mentions(mention, "handler", ["ruby"]),
+        inv.nodes(ex_nodes, "Function", ["ruby"]))
     eps = eps.unionByName(ruby_eps)
     ex_nodes = ex_nodes.where(F.col("node_type") != "Endpoint").unionByName(eps)
-    imports_map = mention.where(F.col("m_kind") == "import").select(
+    imports_map = inv.mentions(mention, "import").select(
         "repo", "lang", F.col("src_file").alias("file"),
         F.col("dst_name").alias("name"), F.col("dst_file").alias("module"))
 
     # endpoint-group prefix rewrite (rust scope/nest/mount/configure) BEFORE
     # keys are computed — renames endpoints and their handler mentions
     from .link.groups import apply_endpoint_groups
-    ex_nodes, mention = apply_endpoint_groups(ex_nodes, mention, imports_map)
+    ex_nodes, mention = apply_endpoint_groups(ex_nodes, mention, imports_map,
+                                              inv)
 
     # file-plane nodes carry no body_mode/off (their bodies are empty by
     # construction); allowMissingColumns fills the slimming columns with null
@@ -341,7 +363,7 @@ def build_graph(spark: SparkSession, source: DataFrame,
                   .withColumn("key_h", F.xxhash64("node_key"))
                   .withColumn("has_body",
                               (F.length(F.coalesce("body", F.lit(""))) > 0)
-                              | F.col("body_mode").isNotNull()))
+                              | F.col("body_mode").isNotNull()), "nodes")
     if os.environ.get("STAKGRAPH_CHECK_SURROGATES"):
         # debug-flagged guard for the 64-bit surrogate collision math
         # (EDGE_COLS_H comment above): node_key is unique post-dedup, so a
@@ -373,9 +395,11 @@ def build_graph(spark: SparkSession, source: DataFrame,
     stage("direct_edges")
 
     # ---------------- linking plane ----------------
-    calls_m = mention.where(
-        (F.col("m_kind") == "call")
-        & F.element_at("m_extra", "class_new").isNull()).select(
+    # every kind-sliced input comes from the raw inventory: a kind the corpus
+    # lacks is an empty relation, and Catalyst drops each family, union
+    # branch and cascade strategy built only from it (inventory.py)
+    calls_m = inv.mentions(mention, "call").where(
+        F.element_at("m_extra", "class_new").isNull()).select(
         "repo", "lang", "src_type", "src_name", "src_file", "src_start",
         F.col("dst_name").alias("called"), "operand",
         F.element_at("m_extra", "rcv_type").alias("rcv_type"),
@@ -383,14 +407,14 @@ def build_graph(spark: SparkSession, source: DataFrame,
         F.element_at("m_extra", "rcv_field").alias("rcv_field"),
         F.element_at("m_extra", "rcv_call").alias("rcv_call"),
         F.element_at("m_extra", "skip").alias("skipflag"))
-    struct_fields = mention.where(F.col("m_kind") == "struct_field").select(
+    struct_fields = inv.mentions(mention, "struct_field").select(
         "repo", "lang", F.col("src_name").alias("type"),
         F.col("dst_name").alias("field"),
         F.element_at("m_extra", "ftype").alias("ftype"))
 
-    functions = nodes.where(F.col("node_type") == "Function")
-    instances = nodes.where(F.col("node_type") == "Instance")
-    variables = nodes.where(F.col("node_type") == "Var")
+    functions = inv.nodes(nodes, "Function")
+    instances = inv.nodes(nodes, "Instance")
+    variables = inv.nodes(nodes, "Var")
 
     # handler linking for languages WITHOUT a custom handler_finder (go & co)
     # goes through the same cascade as calls (format.rs:552-577 routes the
@@ -401,12 +425,12 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # endpoint (react_ts handler_finder returns (endpoint, None));
     # Next.js verb-style handlers resolve same-file case-insensitively
     KEEP_ON_MISS = ["typescript", "react"]
-    handler_m = mention.where(F.col("m_kind") == "handler").select(
+    handler_m = inv.mentions(mention, "handler").select(
         "repo", "lang", "src_type", "src_name", "src_file", "src_start",
         "src_verb", "dst_name",
         F.element_at("m_extra", "verb_style").alias("verb_style"))
     verb_handler_edges = simple_link.resolve_verb_handlers(
-        handler_m.where(F.col("verb_style") == "1"), nodes)
+        handler_m.where(F.col("verb_style") == "1"), functions)
     handler_m = handler_m.where(F.col("verb_style").isNull()).drop("verb_style")
     hm_cascade = (handler_m.where(~F.col("lang").isin(USE_HANDLER_FINDER))
                   .withColumn("called", F.col("dst_name"))
@@ -422,8 +446,7 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # java + csharp: receiver typed as an interface resolves to an
     # implementing class's method (java_resolver.rs:239-259,
     # cs_resolver.rs:215-262)
-    trait_impls = (mention.where((F.col("m_kind") == "implements")
-                                 & F.col("lang").isin("java", "csharp"))
+    trait_impls = (inv.mentions(mention, "implements", ["java", "csharp"])
                    .selectExpr("repo", "lang", "src_name as cls",
                                "dst_name as trait").distinct())
 
@@ -441,7 +464,7 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # (3 aggregation stages instead of ~12 per-family ones); eager: every
     # family job reads the materialized RDD instead of recomputing
     fut_symtab = pool.submit(
-        lambda: _ckpt(simple_link.build_symtab(nodes)))
+        lambda: _ckpt(simple_link.build_symtab(nodes), "symtab"))
     symtab = fut_symtab.result()
 
     # Families that depend only on nodes/mention/symtab are CONSTRUCTED here,
@@ -463,13 +486,12 @@ def build_graph(spark: SparkSession, source: DataFrame,
     INSTANCE_FILTER_LANGS = ["java", "c"]
     class_names = (symtab.where(F.col("t_Class").isNotNull())
                    .select("repo", "lang", F.col("name").alias("data_type")))
-    inst_drop = (nodes.where((F.col("node_type") == "Instance")
-                             & F.col("lang").isin(INSTANCE_FILTER_LANGS))
+    inst_drop = (inv.nodes(nodes, "Instance", INSTANCE_FILTER_LANGS)
                  .join(class_names, ["repo", "lang", "data_type"], "left_anti")
                  .select("key_h"))
     nodes_no_badinst = nodes.join(inst_drop, "key_h", "left_anti")
 
-    impl_m = mention.where(F.col("m_kind") == "implements").select(
+    impl_m = inv.mentions(mention, "implements").select(
         "repo", "lang", "src_name", "src_file", "src_start", "dst_name")
     impl_edges = simple_link.resolve_implements(impl_m, symtab)
 
@@ -479,7 +501,7 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # handler failed the cascade are DROPPED (format.rs:516-523 + default
     # handler_finder)
     py_handler_edges = simple_link.resolve_handlers(
-        handler_m.where(F.col("lang") == "python"), nodes)
+        handler_m.where(F.col("lang") == "python"), functions)
 
     # set-valued mentions: intersect the per-function identifier array with
     # the per-(repo,lang) symbol-name set FIRST, explode after — a
@@ -491,12 +513,12 @@ def build_graph(spark: SparkSession, source: DataFrame,
     SET_BUCKETS = 16
 
     def explode_set(kind: str, symbol_type: str) -> DataFrame:
-        name_sets = (nodes.where(F.col("node_type") == symbol_type)
+        name_sets = (inv.nodes(nodes, symbol_type)
                      .groupBy("repo", "lang",
                               F.pmod(F.xxhash64("name"),
                                      F.lit(SET_BUCKETS)).alias("_b"))
                      .agg(F.collect_set("name").alias("sym_names")))
-        sets = mention.where(F.col("m_kind") == kind).select(
+        sets = inv.mentions(mention, kind).select(
             "repo", "lang", "src_type", "src_name", "src_file", "src_start",
             "names")
         return (sets.join(name_sets, ["repo", "lang"], "inner")
@@ -505,13 +527,13 @@ def build_graph(spark: SparkSession, source: DataFrame,
                         F.explode(F.array_intersect("names", "sym_names"))
                         .alias("dst_name")))
 
-    import_bodies = (nodes.where(F.col("node_type") == "Import")
+    import_bodies = (inv.nodes(nodes, "Import")
                      .select("repo", "lang", F.col("file").alias("src_file"),
                              F.col("body").alias("import_body")))
     var_edges = simple_link.function_contains_vars(
-        explode_set("ident_set", "Var"), nodes, import_bodies)
+        explode_set("ident_set", "Var"), variables, import_bodies)
 
-    import_edge_m = mention.where(F.col("m_kind") == "import_edge").select(
+    import_edge_m = inv.mentions(mention, "import_edge").select(
         "repo", "lang", "src_name", "src_file", "src_start", "dst_name", "dst_file")
     imp_edges = simple_link.import_edges(import_edge_m, nodes)
 
@@ -524,16 +546,16 @@ def build_graph(spark: SparkSession, source: DataFrame,
     def tag(df, kind):
         return df.withColumn("kind", F.lit(kind)).select(*M_COLS)
 
-    operand_m = tag(mention.where(F.col("m_kind") == "operand_cls")
+    operand_m = tag(inv.mentions(mention, "operand_cls")
                     .withColumn("src_type", F.lit("Function")), "operand")
     class_new_m = tag(
-        mention.where((F.col("m_kind") == "call")
-                      & (F.element_at("m_extra", "class_new") == "1")),
+        inv.mentions(mention, "call")
+        .where(F.element_at("m_extra", "class_new") == "1"),
         "class_new")
-    renders_m = tag(mention.where(F.col("m_kind") == "renders"), "renders")
-    tc_m = tag(mention.where(F.col("m_kind") == "test_class"), "test_class")
+    renders_m = tag(inv.mentions(mention, "renders"), "renders")
+    tc_m = tag(inv.mentions(mention, "test_class"), "test_class")
     dm_m = tag(explode_set("dm_set", "DataModel"), "dm")
-    cls_nodes = nodes.where(F.col("node_type") == "Class")
+    cls_nodes = inv.nodes(nodes, "Class")
 
     def node_m(df, src_type, dst_col, kind):
         return tag(df.select(
@@ -551,23 +573,33 @@ def build_graph(spark: SparkSession, source: DataFrame,
             F.split(F.element_at("meta", "includes"), ","))),
         "Class", F.trim("inc"), "includes")
     instance_m = node_m(
-        nodes.where((F.col("node_type") == "Instance")
-                    & F.col("data_type").isNotNull()),
+        instances.where(F.col("data_type").isNotNull()),
         "Instance", F.col("data_type"), "instance")
     fused_in = operand_m
     for t in (class_new_m, renders_m, tc_m, dm_m, parent_m, includes_m,
               instance_m):
         fused_in = fused_in.unionByName(t)
     fused_edges = simple_link.fused_symtab_edges(fused_in, symtab)
-    ruby_dm_edges = simple_link.ruby_dm_within(nodes)
+    ruby_dm_edges = simple_link.ruby_dm_within(
+        inv.nodes(nodes, "DataModel", ["ruby"]),
+        inv.nodes(nodes, "Function", ["ruby"]))
 
     php_handler = simple_link.php_handler_edges(
-        mention.where(F.col("m_kind") == "php_handler"), nodes)
-    ng_renders = simple_link.angular_renders(mention)
-    api_edges = api_link.link_requests_to_endpoints(nodes)
-    itest_edges = api_link.link_integration_tests(nodes)
-    e2e_edges = api_link.link_e2e_tests_pages(nodes)
-    e2e_testid_edges = api_link.link_e2e_test_ids(nodes)
+        inv.mentions(mention, "php_handler"),
+        inv.nodes(nodes, "Function", ["php"]))
+    ng_renders = simple_link.angular_renders(
+        inv.mentions(mention, "ng_render"),
+        inv.mentions(mention, "ng_component"))
+    endpoints = inv.nodes(nodes, "Endpoint")
+    e2e_tests = inv.nodes(nodes, "E2eTest")
+    api_edges = api_link.link_requests_to_endpoints(
+        inv.nodes(nodes, "Request"), endpoints)
+    itest_edges = api_link.link_integration_tests(
+        inv.nodes(nodes, "IntegrationTest"), endpoints)
+    e2e_edges = api_link.link_e2e_tests_pages(
+        e2e_tests, inv.nodes(nodes, "Page"))
+    e2e_testid_edges = api_link.link_e2e_test_ids(
+        e2e_tests, inv.nodes(nodes, "Function", ["typescript", "react"]))
 
     # ---- cascade results (the pool thread's jobs have been executing under
     # all of the analysis above) ----
@@ -606,7 +638,8 @@ def build_graph(spark: SparkSession, source: DataFrame,
     dropped_endpoints = all_cascade_eps.join(resolved_eps, "key_h", "left_anti")
 
     uses_edges = simple_link.resolve_uses(
-        unresolved_calls.where(F.col("mk") == "call"), imports_map, nodes)
+        unresolved_calls.where(F.col("mk") == "call"), imports_map,
+        inv.nodes(nodes, "Library"))
     stage("linking_declared")
 
     # final node-plane filters — these depend only on the cascade/symtab
@@ -623,7 +656,8 @@ def build_graph(spark: SparkSession, source: DataFrame,
         nodes_final = nodes_final.join(dropped_endpoints, "key_h", "left_anti")
     SLIM_COLS = ["key_h", "node_key", "node_type", "repo", "lang",
                  "name", "file", "start", "end", "meta"]
-    fut_slim = pool.submit(lambda: _ckpt(nodes_final.select(*SLIM_COLS)))
+    fut_slim = pool.submit(
+        lambda n=nodes_final: _ckpt(n.select(*SLIM_COLS), "prune_slim"))
 
     # materialize every family as a CONCURRENT job: the driver thread pool
     # overlaps their planning and their (mostly sub-second) stages, which
@@ -662,21 +696,21 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # (161 s vs 116 s — job/checkpoint overheads dominate);
     # STAKGRAPH_CONC_LINK keeps that experiment reachable.
     if os.environ.get("STAKGRAPH_CONC_LINK"):
-        futs = [pool.submit(lambda d=d: _ckpt(_norm_edges_h(d)))
+        futs = [pool.submit(lambda d=d: _ckpt(_norm_edges_h(d), "edge_family"))
                 for d in fams]
         checked = [f.result() for f in futs]
         edges = checked[0]
         for e in checked[1:]:
             edges = edges.unionByName(e)
     else:
-        k = int(os.environ.get("STAKGRAPH_SUBUNION_K", "5"))
-        groups = [fams[i:i + k] for i in range(0, len(fams), k)]
+        groups = [fams[i:i + subunion_k]
+                  for i in range(0, len(fams), subunion_k)]
 
         def _sub(g):
             u = _norm_edges_h(g[0])
             for e in g[1:]:
                 u = u.unionByName(_norm_edges_h(e))
-            return _ckpt(u)
+            return _ckpt(u, "edge_subunion")
 
         futs = [pool.submit(lambda g=g: _sub(g)) for g in groups]
         checked = [f.result() for f in futs]
@@ -687,7 +721,8 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # family RDDs — one shuffle, shallow plan.  Dedup key is the surrogate
     # pair: a false merge needs two distinct edges colliding on BOTH 64-bit
     # endpoint hashes with the same edge_type (p ~ 1e-20 at 10^9 edges).
-    edges = _ckpt(edges.dropDuplicates(["src_h", "dst_h", "edge_type"]))
+    edges = _ckpt(edges.dropDuplicates(["src_h", "dst_h", "edge_type"]),
+                  "edges")
     stage("edges_linked")
 
     # indirect integration tests: IntegrationTest -CALLS-> helper whose body
@@ -707,8 +742,20 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # that gained an indirect test) and its values are deterministic
     # (distinct sets + an order-insensitive min_by arg-min), so the
     # checkpoint cannot perturb the output.
+    # The inputs are bound at submit time: `edges` is rebound by the prune
+    # plane below while this task may not have started yet.  The node side
+    # is the prune plane's slim checkpoint of nodes_final (same rows, every
+    # column this join reads), so the table's plan stays shallow.  Without
+    # IntegrationTest nodes it plans as an empty relation, which ckpt
+    # returns as is, and the meta merge below folds away.
+    def indirect_tests(slim: DataFrame, e: DataFrame) -> DataFrame:
+        return _ckpt(api_link.indirect_test_endpoints(
+            inv.nodes(slim, "IntegrationTest"), inv.nodes(slim, "Function"),
+            inv.nodes(slim, "Request"), inv.nodes(slim, "Endpoint"), e),
+            "indirect_tests")
+
     fut_ind = pool.submit(
-        lambda: _ckpt(api_link.indirect_test_endpoints(nodes_final, edges)))
+        lambda s=fut_slim, e=edges: indirect_tests(s.result(), e))
 
     # fat-companion body table, same overlap treatment as `ind` (it
     # depends only on the RAW checkpoint): dedup-to-unique key_h is
@@ -718,13 +765,13 @@ def build_graph(spark: SparkSession, source: DataFrame,
     # any partitioning — and materializing it during the prune plane takes
     # its filter/key/dedup subtree out of the final node plan's count-time
     # AQE stepping.
-    fat_lazy = (_key(raw.where(F.col("rec") == "fat")
+    fat_lazy = (_key(inv.of(raw.where(F.col("rec") == "fat"), "fat")
                      .select("node_type", "name", "file", "start", "body",
                              "meta", "repo", "lang"))
                 .select(F.xxhash64("node_key").alias("key_h"),
                         F.col("body").alias("_fat_body"))
                 .dropDuplicates(["key_h"]))
-    fut_fat = pool.submit(lambda: _ckpt(fat_lazy))
+    fut_fat = pool.submit(lambda: _ckpt(fat_lazy, "fat_bodies"))
 
     # ---------------- prune plane ----------------
     from .prune import prune_graph
@@ -791,4 +838,5 @@ def build_graph(spark: SparkSession, source: DataFrame,
                 "node_key"))
     stage("pruned")
 
-    return GraphResult(nodes=nodes, edges=edges, metrics=metrics)
+    return GraphResult(nodes=nodes, edges=edges, metrics=metrics,
+                       inventory=inv.triples)

@@ -33,37 +33,40 @@ CLEAN_DIRECTIVES: dict[str, list[tuple[str, ...]]] = {
 }
 
 
-def dedup_datamodels_vs_classes(nodes: DataFrame, edges: DataFrame,
-                                lang: str, remove_t: str, keep_t: str) -> DataFrame:
-    """Remove a <remove_t> when a <keep_t> with the same (name, file) has
-    OPERAND edges (btreemap_graph.rs:718-754)."""
+def dedup_drops(slim: DataFrame, base: DataFrame, edges: DataFrame,
+                lang: str, remove_t: str, keep_t: str) -> DataFrame:
+    """key_h of each <remove_t> shadowed by a <keep_t> with the same
+    (name, file) that has OPERAND edges (btreemap_graph.rs:718-754).  The
+    keepers come from `base` (the post-orphan node view) and `edges`; the
+    candidates may come from the wider `slim`, since the caller applies
+    every drop set to slim together with the orphan set."""
     operand_srcs = (edges.where(F.col("edge_type") == "Operand")
                     .select(F.col("src_h")).distinct())
-    keepers = (nodes.where((F.col("node_type") == keep_t) & (F.col("lang") == lang))
+    keepers = (base.where((F.col("node_type") == keep_t)
+                          & (F.col("lang") == lang))
                .join(operand_srcs,
-                     nodes["key_h"] == operand_srcs["src_h"], "leftsemi")
+                     base["key_h"] == operand_srcs["src_h"], "leftsemi")
                .select("repo", "lang", "name", "file").distinct())
-    dms = nodes.where((F.col("node_type") == remove_t) & (F.col("lang") == lang))
-    drop = dms.join(keepers, ["repo", "lang", "name", "file"],
-                    "leftsemi").select("key_h")
-    return nodes.join(drop, "key_h", "left_anti")
+    return (slim.where((F.col("node_type") == remove_t)
+                       & (F.col("lang") == lang))
+            .join(keepers, ["repo", "lang", "name", "file"], "leftsemi")
+            .select("key_h"))
 
 
-def filter_parents_without_children(nodes: DataFrame, lang: str,
-                                    parent_t: str, child_t: str,
-                                    meta_key: str) -> DataFrame:
-    """Remove <parent_t> nodes whose name never appears as a <child_t>'s
-    meta[<meta_key>] (btreemap_graph.rs:664-706; name-only matching)."""
-    child_names = (nodes.where((F.col("node_type") == child_t)
-                               & (F.col("lang") == lang))
+def filter_drops(slim: DataFrame, base: DataFrame, lang: str,
+                 parent_t: str, child_t: str, meta_key: str) -> DataFrame:
+    """key_h of each <parent_t> whose name never appears as a <child_t>'s
+    meta[<meta_key>] in `base` (btreemap_graph.rs:664-706; name-only
+    matching).  A parent whose only child was orphan-pruned goes too."""
+    child_names = (base.where((F.col("node_type") == child_t)
+                              & (F.col("lang") == lang))
                    .select("repo", "lang",
                            F.element_at("meta", meta_key).alias("name"))
                    .where(F.col("name").isNotNull()).distinct())
-    parents = nodes.where((F.col("node_type") == parent_t)
-                          & (F.col("lang") == lang))
-    drop = parents.join(child_names, ["repo", "lang", "name"],
-                        "left_anti").select("key_h")
-    return nodes.join(drop, "key_h", "left_anti")
+    return (slim.where((F.col("node_type") == parent_t)
+                       & (F.col("lang") == lang))
+            .join(child_names, ["repo", "lang", "name"], "left_anti")
+            .select("key_h"))
 
 
 def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
@@ -130,6 +133,45 @@ def prune_orphan_functions(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return remove
 
 
+def prune_keys(slim: DataFrame, edges: DataFrame) -> DataFrame:
+    """(key_h, node_key) of every node that survives the prune plane.
+
+    Linear plan: the orphan set and each clean_graph directive's drop set
+    are computed side by side, unioned, and removed from `slim` by ONE
+    anti-join.  The directives touch disjoint (lang, node_type) slices
+    (python DataModel/Class, go and rust Class/Function), so no directive
+    can see another's drops and evaluating them in parallel equals the
+    reference's sequential dispatch.  Chaining them instead made each
+    directive read the previous result three times, which planned the
+    orphan subtree 3^3 = 27 times under the final checkpoint.
+
+    The directives' EVIDENCE (Operand-bearing keepers, child Functions)
+    comes from the post-orphan `base`, as in the reference, where
+    clean_graph runs after the orphan prune."""
+    removed = prune_orphan_functions(slim, edges)
+    base = slim.join(removed, "key_h", "left_anti")
+
+    # the reference's remove_node drops a node's edges with it — the dedup
+    # directive must not count an Operand edge whose dst Function was just
+    # orphan-pruned as keeper evidence (orphan-pruned nodes are all
+    # Functions, and Operand dsts are Functions, so dst is the only side
+    # that can dangle here).  This filtered view feeds ONLY the directives:
+    # the final endpoint joins use the raw checkpointed edge table.
+    edges_for_directives = edges.join(
+        removed.withColumnRenamed("key_h", "dst_h"), "dst_h", "left_anti")
+
+    drops = removed
+    for lang, directives in CLEAN_DIRECTIVES.items():
+        for d in directives:
+            if d[0] == "dedup":
+                drops = drops.unionByName(dedup_drops(
+                    slim, base, edges_for_directives, lang, d[1], d[2]))
+            elif d[0] == "filter":
+                drops = drops.unionByName(filter_drops(
+                    slim, base, lang, d[1], d[2], d[3]))
+    return slim.join(drops, "key_h", "left_anti").select("key_h", "node_key")
+
+
 def prune_graph(nodes: DataFrame, edges: DataFrame,
                 pool=None, slim: DataFrame | None = None,
                 full: DataFrame | None = None
@@ -157,33 +199,12 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
     if slim is None:
         slim = _ckpt(nodes.select("key_h", "node_key", "node_type", "repo",
                                   "lang", "name", "file", "start", "end",
-                                  "meta"))
+                                  "meta"), "prune_slim")
 
-    removed = prune_orphan_functions(slim, edges)
-    slim = slim.join(removed, "key_h", "left_anti")
-
-    # the reference's remove_node drops a node's edges with it — the dedup
-    # directive must not count an Operand edge whose dst Function was just
-    # orphan-pruned as keeper evidence (orphan-pruned nodes are all
-    # Functions, and Operand dsts are Functions, so dst is the only side
-    # that can dangle here).  This filtered view feeds ONLY the directives:
-    # the final endpoint joins below use the raw checkpointed edge table,
-    # where re-running the `removed` subtree would be pure duplicated work.
-    edges_for_directives = edges.join(
-        removed.withColumnRenamed("key_h", "dst_h"), "dst_h", "left_anti")
-
-    for lang, directives in CLEAN_DIRECTIVES.items():
-        for d in directives:
-            if d[0] == "dedup":
-                slim = dedup_datamodels_vs_classes(
-                    slim, edges_for_directives, lang, d[1], d[2])
-            elif d[0] == "filter":
-                slim = filter_parents_without_children(slim, lang, d[1], d[2], d[3])
-
-    keys = _ckpt(slim.select("key_h", "node_key"))
+    keys = _ckpt(prune_keys(slim, edges), "prune_keys")
     # `keys` already encodes EVERY drop (slim was built from the filtered
-    # node view, then lost `removed` + the directive hits), so the two final
-    # materializations filter the RAW CHECKPOINTED tables by keys alone —
+    # node view, then lost the orphan and directive drop sets), so the two
+    # final materializations filter the RAW CHECKPOINTED tables by keys alone —
     # re-running the anti-join subtrees (removed / instance-filter /
     # endpoint-drop) inside these jobs recomputed each of them a second
     # time and deepened the plans Catalyst had to re-optimize (measured:
@@ -206,7 +227,7 @@ def prune_graph(nodes: DataFrame, edges: DataFrame,
              .select(*EDGE_COLS))
     if pool is not None:
         # the two final materializations are independent — overlap them
-        fn = pool.submit(lambda: _ckpt(nodes))
-        fe = pool.submit(lambda: _ckpt(edges))
+        fn = pool.submit(lambda: _ckpt(nodes, "graph_nodes"))
+        fe = pool.submit(lambda: _ckpt(edges, "graph_edges"))
         return fn.result(), fe.result()
-    return (_ckpt(nodes), _ckpt(edges))
+    return (_ckpt(nodes, "graph_nodes"), _ckpt(edges, "graph_edges"))

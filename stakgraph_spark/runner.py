@@ -188,9 +188,11 @@ class PipelineRunner:
         # rewrites changed partitions) and schema inference samples ONE
         # footer — old rows surface the missing columns as NULL instead,
         # which the consumers already handle (ADVICE r04)
+        # a never-extracted workdir (empty source) reads as an empty stream
         from .schema import RAW_SCHEMA
         raw = (self.spark.read.schema(RAW_SCHEMA).parquet(self.raw_path)
-               if os.path.exists(self.raw_path) else None)
+               if os.path.exists(self.raw_path)
+               else self.spark.createDataFrame([], RAW_SCHEMA))
         self._metric("extract", (time.time() - t0) * 1000,
                      {"partitions_total": n_parts,
                       "partitions_skipped": n_parts - n_todo,
@@ -207,9 +209,10 @@ class PipelineRunner:
         g_metrics: list = []
         if n_todo or n_removed or not link_done \
                 or not os.path.exists(os.path.join(nodes_path, "_SUCCESS")):
-            # keep only raw rows for partitions present in this source
+            # keep only raw rows for partitions present in this source;
+            # build_graph checkpoints the stream itself
             raw = raw.join(parts, ["repo", "lang"], "leftsemi")
-            g = build_graph(self.spark, source, raw=raw.localCheckpoint())
+            g = build_graph(self.spark, source, raw=raw)
             (g.nodes.write.mode("overwrite").partitionBy("repo", "lang")
              .parquet(nodes_path))
             (g.edges.write.mode("overwrite").partitionBy("repo", "lang")
@@ -224,8 +227,11 @@ class PipelineRunner:
         else:
             link_rebuilt = False
 
-        nodes = self.spark.read.parquet(nodes_path)
-        edges = self.spark.read.parquet(edges_path)
+        # explicit schemas: an empty graph is written as no data files,
+        # which schema inference cannot read
+        from .schema import EDGES_SCHEMA, NODES_SCHEMA
+        nodes = self.spark.read.schema(NODES_SCHEMA).parquet(nodes_path)
+        edges = self.spark.read.schema(EDGES_SCHEMA).parquet(edges_path)
         node_counts = {r["node_type"]: r["count"] for r in
                        nodes.groupBy("node_type").count().collect()}
         edge_counts = {r["edge_type"]: r["count"] for r in

@@ -74,3 +74,71 @@ def test_prune_full_superset_equivalence(spark):
     kept = {(r["src_key"], r["dst_key"], r["edge_type"])
             for r in new_e.collect()}
     assert kept == {("k4", "k1", "Operand"), ("k1", "k2", "Calls")}
+
+
+def test_directives_share_one_post_orphan_base(spark):
+    """The three clean_graph directives run side by side over one
+    post-orphan base and drop their hits with one anti-join (prune_keys).
+
+    One node table holds every directive's case: a python DataModel
+    shadowed by an Operand-bearing Class, go and rust Classes without
+    children next to ones with children, and a go Class whose only child
+    Function is orphan-pruned — the go filter sees the base AFTER the
+    orphan prune, so that Class goes too."""
+    from stakgraph_spark.prune import prune_graph, prune_keys
+
+    r = "repo"
+    nodes = [
+        # python: Class with Operand evidence shadows the DataModel
+        (1, "py_cls", "Class", r, "python", "X", "m.py", 1, 9, {}, ""),
+        (2, "py_dm", "DataModel", r, "python", "X", "m.py", 1, 9, {}, ""),
+        (3, "py_fn", "Function", r, "python", "f", "m.py", 20, 25, {}, ""),
+        # python: a DataModel with no shadowing Class stays
+        (4, "py_dm_alone", "DataModel", r, "python", "Y", "m.py", 30, 35,
+         {}, ""),
+        # go: a Class without children goes, one with a child stays
+        (10, "go_lonely", "Class", r, "go", "Lonely", "a.go", 1, 5, {}, ""),
+        (11, "go_kept", "Class", r, "go", "Kept", "a.go", 10, 15, {}, ""),
+        (12, "go_kept_m", "Function", r, "go", "m", "a.go", 16, 18,
+         {"operand": "Kept"}, ""),
+        # go: a Class whose only child is orphan-pruned (nested in `outer`,
+        # no calls either way) goes with it
+        (13, "go_orph_cls", "Class", r, "go", "Orphaned", "b.go", 1, 5,
+         {}, ""),
+        (14, "go_outer", "Function", r, "go", "outer", "b.go", 10, 30,
+         {}, ""),
+        (15, "go_orph_m", "Function", r, "go", "inner", "b.go", 12, 14,
+         {"operand": "Orphaned"}, ""),
+        # rust: the same filter
+        (20, "rs_lonely", "Class", r, "rust", "RLonely", "a.rs", 1, 5,
+         {}, ""),
+        (21, "rs_kept", "Class", r, "rust", "RKept", "a.rs", 10, 15, {}, ""),
+        (22, "rs_kept_m", "Function", r, "rust", "m", "a.rs", 16, 18,
+         {"operand": "RKept"}, ""),
+    ]
+    edges = [
+        (1, 3, "Operand", None, None, None, r, "python"),
+        (15, 14, "NestedIn", None, None, None, r, "go"),
+        (13, 15, "Operand", None, None, None, r, "go"),
+    ]
+    # checkpointed inputs, as the pipeline hands them over: a local
+    # relation would let the optimizer fold the plan under test away
+    slim = _mk_nodes(spark, nodes).drop("body").localCheckpoint()
+    edges_df = _mk_edges(spark, edges).localCheckpoint()
+
+    keys = prune_keys(slim, edges_df)
+    assert {r["node_key"] for r in keys.collect()} == {
+        "py_cls", "py_fn", "py_dm_alone", "go_kept", "go_kept_m",
+        "go_outer", "rs_kept", "rs_kept_m"}
+
+    n, e = prune_graph(slim, edges_df)
+    assert sorted(r["node_key"] for r in n.collect()) == sorted(
+        r["node_key"] for r in keys.collect())
+    assert {(r["src_key"], r["dst_key"]) for r in e.collect()} == {
+        ("py_cls", "py_fn")}
+
+    # each piece is planned once: the chained directives planned the
+    # orphan subtree 27 times (5,787 physical operators on the web-app
+    # benchmark corpus)
+    plan = keys._jdf.queryExecution().optimizedPlan().treeString()
+    assert plan.count("\n") < 1000
